@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line.
+  * SPARK_GRAFT_SF_DIR, writes the per-query evidence to a file
+  * artifact and prints one JSON line of totals.
   *
-  * Queries are materialized through the `noop` sink — a bare `count()`
-  * would let Catalyst prune most of a projection-only plan and
-  * under-report; noop executes the full plan and discards rows, which
-  * is the honest single-node throughput number.
+  * Each sample is one [[QueryRun.once]] into the `noop` sink: the full
+  * plan executes and the rows are discarded, and everything the sample
+  * left behind is released before the next one, so every sample does
+  * its own work.
   *
   * Noise handling (this host has multi-minute phases where JVM threads
   * starve — identical code swings 6 s ↔ 40 s): every query runs TWO
@@ -34,17 +33,45 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** One query's outcome: its timed samples, the error that ended them
+    * (if any), and the canary seconds just before and just after them. */
+  final case class Outcome(key: String, samples: Seq[Double], error: Option[String],
+                           canary: (Double, Double))
+
+  /** (stdout line, file artifact), both from one prefix of totals. A
+    * tail-limited stdout capture keeps only the last 2 000 chars, so the
+    * line carries the totals alone and stays short at any query count; the
+    * per-query maps (medians, samples, status, canaries) live in the
+    * file artifact, after the same prefix. */
+  def render(results: Seq[Outcome], cpus: Int, sf: String, load: (String, String)): (String, String) = {
+    def jnum(d: Double): String = f"$d%.3f"
+    def jstr(s: String): String = "\"" + s.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
+    // any successful samples still contribute a median (keeps the total
+    // honest); the error, if any, shows in status + failed regardless
+    val ok = results.filter(_.samples.nonEmpty)
+    val medians = ok.map(o => o.key -> median(o.samples))
+    val total = medians.map(_._2).sum
+    val instTotal = medians.collect { case (k, v) if Instruments(k) => v }.sum
+    val prefix = s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
+      s""""operators_total":${jnum(total - instTotal)},"instruments_total":${jnum(instTotal)},""" +
+      s""""failed":${results.count(_.error.isDefined)},"cpus":$cpus,"sf":${jstr(sf)}"""
+    val maps = obj(Seq(
+      "instruments" -> arr(Instruments.toSeq.sorted.map(jstr)),
+      "queries" -> obj(medians.map { case (k, v) => k -> jnum(v) }),
+      "samples" -> obj(ok.map(o => o.key -> arr(o.samples.map(jnum)))),
+      "status" -> obj(results.map(o => o.key -> jstr(o.error.fold("ok")("failed: " + _.take(80))))),
+      "canary" -> obj(results.map(o => o.key -> arr(Seq(o.canary._1, o.canary._2).map(jnum)))),
+      "load" -> arr(Seq(load._1, load._2).map(jstr))))
+    (prefix + "}", prefix + "," + maps.drop(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // JVM/codegen warmup outside the timed region
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = Sessions.fromEnv("graft-bench")
+    QueryRun.warm(spark, sfDir)
 
     // Fixed-work noise canary: this host has multi-minute phases where
     // JVM threads starve and identical code runs 10-100× slower. One
@@ -60,86 +87,32 @@ object Bench {
       catch { case _: Throwable => "-1" }
     val loadStart = loadAvg()
 
-    // one timed execution; Left(error) on failure
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val r =
-        try {
-          val df = fn(spark, sfDir)
-          try { df.write.format("noop").mode("overwrite").save(); Right(()) }
-          // checkpoint-backed results (incrementalNearDup) hold RDD
-          // blocks clearCache can't see; release is a no-op otherwise
-          finally graft.operators.Dedup.release(df)
+    // two samples; a third breaks the tie when they disagree. A failed
+    // sample ends the query's samples and marks it failed — a failed
+    // tie-breaker is a real failure signal, not a fallback to "ok"
+    def samples(name: String, fn: QueryRun.Query): (Seq[Double], Option[String]) = {
+      def run() = QueryRun.once(spark, name, fn, sfDir).map(_.seconds)
+      run() match {
+        case Left(e) => (Nil, Some(e))
+        case Right(s1) => run() match {
+          case Left(e) => (Seq(s1), Some(e))
+          case Right(s2) if math.abs(s1 - s2) <= math.max(2.0, 0.5 * math.min(s1, s2)) =>
+            (Seq(s1, s2), None)
+          case Right(s2) => run().fold(e => (Seq(s1, s2), Some(e)), s3 => (Seq(s1, s2, s3), None))
         }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage.take(200)}")
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(80))
-        }
-      // drop caches/broadcasts between queries so one operator's
-      // working set can't GC-starve the next measurement
-      spark.catalog.clearCache()
-      r.map(_ => (System.nanoTime() - t0) / 1e9)
+      }
     }
-
     // canaries BRACKET the samples: cy before, cy2 after — a starvation
     // phase that begins mid-samples (the common case: the query itself
     // pushes the host into contention) shows in cy2 even when cy was
     // quiet, so slow samples beside a slow cy2 still read as host noise
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val cy = canary()
-      val r = runOnce(name, fn) match {
-        case Left(err) => (name, Seq.empty[Double], Option(err))
-        case Right(s1) =>
-          runOnce(name, fn) match {
-            case Left(err) => (name, Seq(s1), Option(err))
-            case Right(s2) =>
-              val disagree = math.abs(s1 - s2) > math.max(2.0, 0.5 * math.min(s1, s2))
-              if (!disagree) (name, Seq(s1, s2), None)
-              else runOnce(name, fn) match {
-                // a failed tie-breaker is a real failure signal, not a
-                // fallback to "ok" — surface it in status/failed
-                case Left(err) => (name, Seq(s1, s2), Option(err))
-                case Right(s3) => (name, Seq(s1, s2, s3), None)
-              }
-          }
-      }
-      (r._1, r._2, r._3, cy, canary())
+      val (ss, err) = samples(name, fn)
+      Outcome(name, ss, err, (cy, canary()))
     }
-
-    def jnum(d: Double): String = f"$d%.3f"
-    // any successful samples still contribute a median (keeps the total
-    // honest); the error, if any, shows in status + failed regardless
-    val ok = results.collect { case (n, ss, _, _, _) if ss.nonEmpty => n -> median(ss) }
-    val qs = ok.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    val samples = results.collect { case (n, ss, _, _, _) if ss.nonEmpty =>
-      "\"" + n + "\":[" + ss.map(jnum).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val status = results.map { case (n, _, err, _, _) =>
-      "\"" + n + "\":\"" + err.fold("ok")(e => "failed: " + e.replaceAll("[\"\\\\\\n\\r\\t]", " ")) + "\""
-    }.mkString("{", ",", "}")
-    val canaries = results.map { case (n, _, _, cy, cy2) =>
-      "\"" + n + "\":[" + jnum(cy) + "," + jnum(cy2) + "]"
-    }.mkString("{", ",", "}")
-    val total = ok.map(_._2).sum
-    val instTotal = ok.filter(kv => Instruments(kv._1)).map(_._2).sum
-    val opsTotal = total - instTotal
-    val instList = Instruments.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val nFailed = results.count(_._3.isDefined)
-    // The driver's stdout capture truncates long lines mid-JSON — the
-    // old ~20 KB line (inlined samples/status/canary maps) came back
-    // `parsed: null` every round (r16-r18 verdicts). The stdout line is
-    // therefore the COMPACT contract surface only (metric/value/unit/
-    // per-query medians/totals/failed/sf, ~3 KB for 138 queries); the
-    // full evidence maps live exclusively in the file artifact.
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
-      s""""operators_total":${jnum(opsTotal)},"instruments_total":${jnum(instTotal)},""" +
-      s""""failed":$nFailed,"cpus":$cpus,"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
-      s""""operators_total":${jnum(opsTotal)},"instruments_total":${jnum(instTotal)},""" +
-      s""""instruments":$instList,""" +
-      s""""samples":$samples,"status":$status,"canary":$canaries,""" +
-      s""""load":["$loadStart","${loadAvg()}"],"failed":$nFailed,"cpus":$cpus,"sf":"$sfDir"}"""
+    val cpus = Sessions.cpus
+    val (line, full) = render(results, cpus, sfDir, (loadStart, loadAvg()))
     // File artifacts FIRST (and their stderr notices), so the JSON line
     // is the very last stdout before sbt's own [success] trailer — a
     // tail-limited capture then always contains the complete line.
@@ -158,7 +131,7 @@ object Bench {
         java.nio.file.Files.writeString(outPath, full + "\n")
         System.err.println(s"[bench] artifact written to ${outPath.toAbsolutePath}")
       } catch { case e: java.io.IOException =>
-        System.err.println(s"[bench] artifact write to $outPath failed: $e (results are on stdout)")
+        System.err.println(s"[bench] artifact write to $outPath failed: $e (totals are on stdout)")
       }
     }
     println(line)

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Cluster}
@@ -38,12 +37,7 @@ object IvfScale {
     val dir = args(0)
     val nlists = (if (args.length >= 2) args(1) else "16,64,256")
       .split(',').map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-ivfscale"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-ivfscale")
     import spark.implicits._
 
     val emb = Tables.embeddings(spark, dir)

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only: writes `.explain("formatted")` for named SparkEntry
-  * queries to `plans/<tag>/<name>_<suffix>.txt` — the before/after
-  * plan artifacts the optimization rounds commit. Not part of the
-  * library API.
+/** Dev-only: writes the complete `.explain("formatted")` of named
+  * SparkEntry queries over `SPARK_GRAFT_SF_DIR` to
+  * `plans/<tag>/<name>_<suffix>.txt` — the before/after plan artifacts
+  * the optimization rounds commit, and the per-query audit of scan
+  * pruning (`ReadSchema`), pushdown (`PushedFilters`), join strategies
+  * and exchange counts. Not part of the library API.
   *
   * Usage: runMain graft.PlanDump <tag> <suffix> [query ...]
   * (no query args = all queries).
@@ -19,27 +19,18 @@ object PlanDump {
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-plandump"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-plandump")
     // committed plan artifacts must be complete — lift the session
     // profiles' 64 KB plan-string budget for this tool
     spark.conf.set("spark.sql.maxPlanStringLength", (Int.MaxValue - 15).toString)
     Files.createDirectories(Paths.get(s"plans/$tag"))
     names.foreach { n =>
-      try {
-        val df = SparkEntry.queries(n)(spark, dir)
+      QueryRun.once(spark, n, SparkEntry.queries(n), dir, { df =>
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"plans/$tag/${n}_$suffix.txt"), txt)
-        graft.operators.Dedup.release(df)
         System.err.println(s"[plandump] $n ok (${txt.length} chars)")
-      } catch { case e: Throwable =>
-        System.err.println(s"[plandump] $n FAILED: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
+      })
     }
     spark.stop()
   }

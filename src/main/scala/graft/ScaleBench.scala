@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command scaling sweep: times a representative query subset at a
   * list of data-scale factors and emits the SURVEY §14-style scaling
   * table as a JSON artifact, so scaling regressions are diffable
@@ -77,13 +75,7 @@ object ScaleBench {
     val unknown = queries.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scalebench"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect() // JVM warmup
+    val spark = Sessions.fromEnv("graft-scalebench")
 
     // the marker pins (factor, base, base fingerprint): a re-run
     // against a different base dir — or the SAME dir regenerated —
@@ -128,33 +120,10 @@ object ScaleBench {
     val results: Seq[(String, Int, Either[String, Double])] =
       factors.flatMap { f =>
         val dir = dirFor(f)
-        // each factor is a new corpus key for the dup-closure memo:
-        // drop the previous factor's closures (checkpoint blocks the
-        // per-query release below can't reach) or the sweep pins two
-        // node-sized block sets per factor until JVM exit
-        graft.operators.Dedup.clearComponentsMemo()
-        // input-data artifacts (Debezium envelopes) materialize OUTSIDE
-        // the timed windows: input synthesis is harness work, not
-        // operator cost (r14's cdc_debezium_decode 13× was mostly this)
-        SparkEntry.warmInputs(spark, dir)
+        QueryRun.warm(spark, dir)
         queries.map { name =>
-          val fn = SparkEntry.queries(name)
-          val t0 = System.nanoTime()
-          val r =
-            try {
-              val df = fn(spark, dir)
-              try { df.write.format("noop").mode("overwrite").save(); Right(()) }
-              // checkpoint-backed results (dedup_incremental_lsh is in
-              // defaultQueries) hold RDD blocks clearCache can't see; a
-              // multi-factor sweep would otherwise pin one batch-sized
-              // block set PER FACTOR. No-op for plain plans.
-              finally graft.operators.Dedup.release(df)
-            }
-            catch { case e: Throwable =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(80))
-            }
-          spark.catalog.clearCache()
-          val out = r.map(_ => (System.nanoTime() - t0) / 1e9)
+          val out = QueryRun.once(spark, name, SparkEntry.queries(name), dir)
+            .map(_.seconds).left.map(_.take(80))
           System.err.println(f"[scalebench] x$f $name: " +
             out.fold(e => s"FAILED $e", s => f"$s%.2f s"))
           (name, f, out)

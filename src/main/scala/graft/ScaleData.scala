@@ -47,12 +47,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleData <inDir> <outDir> <factor>")
     val (in, out, factor) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scale"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-scale")
     generate(spark, in, out, factor)
     spark.stop()
   }

@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   *    for the synthetic corpus; ICU's static init and per-char calls
   *    dominate small benchmarks), and the UI off.
   *
-  * Verify/Bench pick the profile from `SPARK_GRAFT_PROFILE`
-  * (`cluster` | default `bench`), so the oracle suite runs green under
-  * both.
+  * The harness mains pick the profile from `SPARK_GRAFT_PROFILE`
+  * through [[fromEnv]] (`cluster` | default `bench`), so the oracle
+  * suite runs green under both.
   */
 object Sessions {
 
@@ -73,15 +73,22 @@ object Sessions {
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
 
-  /** Back-compat alias for the local profile (existing mains/tests). */
-  def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
-    benchLocal(b, shufflePartitions)
+  /** Local cores for a harness main: `SPARK_GRAFT_CPUS`, default all
+    * available processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** Profile from `SPARK_GRAFT_PROFILE`: `cluster` or (default) local. */
-  def fromEnv(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster"))
-      cluster(b, shufflePartitions)
-    else benchLocal(b, shufflePartitions)
+  /** The session every harness main runs on: `local[cpus]`, one shuffle
+    * partition per core, the profile from `SPARK_GRAFT_PROFILE`
+    * (`cluster`, or the default local profile), log level WARN. */
+  def fromEnv(appName: String): SparkSession = {
+    val n = cpus
+    val b = SparkSession.builder().master(s"local[$n]").appName(appName)
+    val s = (if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster")) cluster(b, n)
+             else benchLocal(b, n)).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Standalone local session (tests / benchmarks). */
   def local(cores: Int = 32): SparkSession = {

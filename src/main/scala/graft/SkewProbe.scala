@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Changelog
@@ -95,12 +95,7 @@ object SkewProbe {
     val lowK = if (args.length >= 9) args(8).toInt else 1
     val semCap = if (args.length >= 10) args(9).toLong else 8192L
     require(lowK >= 1 && semCap >= 2, s"lowK=$lowK semCap=$semCap invalid")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-skewprobe"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-skewprobe")
     spark.range(1000000L).selectExpr("sum(id)").collect() // JVM warmup
 
     // a synthetic changelog in the Changelog.fromEvents column shape:
@@ -218,7 +213,7 @@ object SkewProbe {
       val total = out.count()
       val modePairs = if (flood >= 2)
         out.filter(col("a_id") < flood && col("b_id") < flood).count() else 0L
-      graft.operators.Dedup.release(out)
+      QueryRun.release(spark, out)
       ((System.nanoTime() - t0) / 1e9, total, modePairs)
     }
     // cluster-size histogram of the SAME construction the operator
@@ -310,7 +305,7 @@ object SkewProbe {
       val out = graft.operators.Dedup.semanticPairsCapped(
         semCorpusOf(0), lowK, 2, 0.9, graft.operators.Cluster.TrainPct, semCap)
       val n = out.count()
-      graft.operators.Dedup.release(out)
+      QueryRun.release(spark, out)
       n
     }
     val lowkSpeedup = lowkUncapped._1 / math.max(1e-9, lowkCapped._1)

@@ -15,10 +15,6 @@ import graft.functions.{Hashing, TextFunctions}
   */
 object SparkEntry {
 
-  /** Flagship: snapshot ⊎ changelog ⇒ current state (SURVEY §2 A8). */
-  def entry(spark: SparkSession): DataFrame =
-    queries("cdc_apply")(spark, "/root/testdata/sf0.001")
-
   private def ev(s: SparkSession, dir: String) = Tables.events(s, dir)
 
   /** The `dsir_weights` demo target slice: every DsirTargetMod-th doc.

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -71,12 +71,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val scale = if (args.nonEmpty) args(0).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-streambench"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-streambench")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,10 +8,7 @@ object Verify {
     // optional extra args: query names — dev-loop filter (driver passes 2 args)
     val only = args.drop(2).toSet
     def keep(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv("graft-verify")
     new java.io.File(outDir).mkdirs()
     // failures must be first-class artifacts, not stderr lines: a query
     // that throws writes <out>/<name>/_ERROR (parquet readers ignore
@@ -20,20 +16,12 @@ object Verify {
     // its per-query `err` field populates) and lands in _failures.json
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name failed: $msg")
+      QueryRun.once(spark, name, fn, sfDir,
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")).left.foreach { msg =>
         failures(name) = msg
         new java.io.File(s"$outDir/$name").mkdirs()
-        val head = (msg +: e.getStackTrace.take(8).map("  at " + _)).mkString("\n")
-        Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), head + "\n")
+        Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg + "\n")
       }
-      // operators persist() intermediates (dedup groups/bands); release
-      // them so cached partitions don't accumulate across the queries
-      // (SparkEntry.queries.size of them — see SURVEY §2)
-      spark.catalog.clearCache()
       // clearCache frees cached BLOCKS but not SHUFFLE FILES: those
       // live on disk until the ContextCleaner sees their
       // ShuffleDependency collected. Across a 128-query run at sf1

@@ -17,9 +17,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{toColumn, toExpr}
   *
   * The hot path ([[cosine]]) is a native codegen'd expression: one
   * fused loop per pair, no per-element boxing — this is what a
-  * 2M-pair brute-force scan runs through. [[cosineHof]] is the
-  * higher-order-function formulation kept as a cross-check: both
-  * produce bit-identical doubles (same operation order).
+  * 2M-pair brute-force scan runs through. It produces the same doubles
+  * as `dot(a, b) / (norm(a) * norm(b))` over the higher-order [[dot]]
+  * and [[norm]] (same operation order).
   */
 object VectorFunctions {
 
@@ -33,11 +33,8 @@ object VectorFunctions {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity via HOFs — reference formulation. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Fused native cosine: xy / (√xx · √yy), all three sums in one
-    * loop, same accumulation order as [[cosineHof]]. */
+    * loop, same accumulation order as [[dot]] / [[norm]]. */
   case class CosineF32(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def nullIntolerant: Boolean = true

@@ -507,10 +507,10 @@ object Dedup {
     // r19 (advisor): the try starts IMMEDIATELY after the first
     // persist — attachStrategy's eager measurement probe used to run
     // outside it, so a failure there pinned withKey/groups for the
-    // session. groups/bhs are vars so the one finally releases
-    // whatever was registered before a failure.
+    // session. groups is a var and bhs grows one arm at a time so the
+    // one finally releases whatever was persisted before a failure.
     var groups: DataFrame = null
-    var bhs: Seq[DataFrame] = Nil
+    val bhs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
       // collapsed groups carry the FULL minhash signature once; each
       // arm only re-splits it into its own band hashes
@@ -528,8 +528,8 @@ object Dedup {
       // one measured attach decision for every arm (the strategy is a
       // property of the group projection, not of the band count)
       val strat = attachStrategy(shProj, col("sh"))
-      bhs = bandsList.map { b =>
-        groups.filter(col("grp_ok") === 1)
+      bandsList.foreach { b =>
+        bhs += groups.filter(col("grp_ok") === 1)
           .select(col("gid"),
             posexplode(Hashing.bandHashes(col("sig"), b, numHashes / b))
               .as(Seq("band", "bh")))
@@ -1620,7 +1620,9 @@ object Dedup {
     * reuse never re-mines; `spark.catalog.clearCache()` between
     * queries cannot free checkpoint blocks, and [[release]] no-ops on
     * the projected plans callers see. Results are deterministic, so
-    * reuse is observationally transparent. */
+    * reuse is observationally transparent. The harness run loop
+    * (`graft.QueryRun.release`) clears the memo after every run, so a
+    * timed run never reuses a closure an earlier run mined. */
   private val ccMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -1648,10 +1650,10 @@ object Dedup {
 
   /** Drop the closure memo AND free its checkpoint blocks (they sit
     * below projections, so the per-result [[release]] can't see
-    * them). Call between corpora in one process — a multi-factor
-    * scale sweep would otherwise pin two node-sized closures PER
-    * FACTOR until JVM exit. Unsafe while any consumer of a memoized
-    * closure is still pending (truncated lineage can't recompute). */
+    * them). Call between runs — a long-lived process would otherwise
+    * pin node-sized closures per corpus until JVM exit. Unsafe while
+    * any consumer of a memoized closure is still pending (truncated
+    * lineage can't recompute). */
   def clearComponentsMemo(blocking: Boolean = false): Unit = {
     ccMemo.values().forEach(df =>
       org.apache.spark.sql.graftbridge.RddBridge.unpersistAllCheckpoints(df, blocking))

@@ -20,9 +20,12 @@ object TestSpark {
 
   /** Complete FormattedMode plan regardless of the session's plan-
     * string cap — truncation would silently hide Exchange/Scan nodes
-    * from grep-based assertions. Synchronized: the conf is session-
-    * scoped, so concurrent suites must not observe a half-restored cap
-    * while building their own audited plan text. */
+    * from grep-based assertions. The conf is session-scoped, so this
+    * assumes suites run one after another, as they do in the one
+    * forked test JVM (`Test / fork := true`, sbt's default
+    * `testForkedParallel := false`): a suite that builds a plan outside
+    * this method while another suite is inside it would see the lifted
+    * cap. The lock only orders callers of this method. */
   def fullPlan(df: Dataset[_]): String = planLock.synchronized {
     val prev = spark.conf.get(capKey)
     spark.conf.set(capKey, (Int.MaxValue - 15).toString)
